@@ -89,10 +89,10 @@ class Sirix:
         return Resource(self, db, res)
 
     def exists_database(self, db: str) -> bool:
-        return self.store.exists_database(db)
+        return self.store.database_exists(db)
 
     def exists_resource(self, db: str, res: str) -> bool:
-        return self.store.exists_resource(db, res)
+        return self.store.exists(db, res)
 
     def drop_database(self, db: str) -> None:
         self.store.drop_database(db)

@@ -182,7 +182,7 @@ class Env:
         return self.xml_tables[name]
 
     def doc(self, db: str, res: str, revision=None) -> DataFrame:
-        if self.store is not None and self.store.exists_resource(db, res):
+        if self.store is not None and self.store.exists(db, res):
             return self.store.doc(db, res, revision=revision)
         if res in self.tables:
             return self.tables[res]
@@ -328,13 +328,9 @@ class Compiler:
             # jn:open(db, res, ts) — the revision current AT an
             # instant (Open.java); resolved via the manifest, then an
             # ordinary pinned-revision read.
-            from datetime import datetime
-
             if self.env.store is None:
                 raise JsoniqCompileError("jn:open(ts) needs a store")
-            return self.env.store.doc(
-                db, res, timestamp=datetime.fromisoformat(args[2])
-            )
+            return self.env.store.doc(db, res, timestamp=args[2])
         rev = int(args[2]) if len(args) > 2 else None
         return self.env.doc(db, res, revision=rev)
 
@@ -377,13 +373,11 @@ class Compiler:
                 # revision whose commit instant falls in [ts1, ts2]
                 # (OpenRevisions.java): manifest lookup (driver-side,
                 # metadata only) → partition-prunable isin filter.
-                from datetime import datetime
-
                 revs = self.env.store.open_revisions(
                     args[0],
                     args[1],
-                    datetime.fromisoformat(str(_lit_value(node.args[1]))),
-                    datetime.fromisoformat(str(_lit_value(node.args[2]))),
+                    str(_lit_value(node.args[1])),
+                    str(_lit_value(node.args[2])),
                 )
                 hv = hv.filter(F.col("revision").isin(revs or [-1]))
             elif node.name in ("jn:previous", "jn:next"):

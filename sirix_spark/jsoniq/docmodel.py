@@ -573,15 +573,7 @@ class DocEvaluator:
                 )
                 key = (h.db, h.res, r["__r"] or h.revision)
                 if key not in ts_cache:
-                    m = self.store._read_manifest(h.db, h.res)
-                    ts_cache[key] = next(
-                        (
-                            e["committed_at"]
-                            for e in m["revisions"]
-                            if e["revision"] == key[2]
-                        ),
-                        "",
-                    )
+                    ts_cache[key] = self.store.rev_entry(*key).committed_at
                 parts.append(
                     '{"revisionNumber":%d,"revisionTimestamp":%s,"revision":%s}'
                     % (key[2], json.dumps(ts_cache[key]), body)
@@ -2198,24 +2190,13 @@ class DocEvaluator:
         its collection store): a single-URI doc() whose name matches
         exactly one stored XML resource rewrites to xml:doc(db, res).
         Two-argument doc(db, res) stays the JSON-store open."""
-        import os as _os
-
         if call.name not in ("doc", "fn:doc") or len(call.args) != 1:
             return None
         a = call.args[0]
         if not isinstance(a, P.Lit) or not isinstance(a.value, str):
             return None
         uri = a.value
-        from sirix_spark.store.xmlstore import XmlStore
-
-        xs = XmlStore(self.store.root)
-        hits = []
-        # XML databases live under the XmlStore's own namespace dir
-        # (root/__xml__/<db>/<res>)
-        if _os.path.isdir(xs.root):
-            for db in sorted(_os.listdir(xs.root)):
-                if xs.exists(db, uri):
-                    hits.append(db)
+        hits = self.store.xml.databases_with(uri)
         if len(hits) != 1:
             return None
         return P.Call("xml:doc", [P.Lit(hits[0]), P.Lit(uri)])
@@ -2425,14 +2406,13 @@ class DocEvaluator:
             # (function/xml/diff/Diff.java; store/xmldiff.py computes
             # it exactly from the key sidecars)
             from sirix_spark.store.xmldiff import xml_diff
-            from sirix_spark.store.xmlstore import XmlStore
 
             lits = [a.value for a in node.args[:2] if isinstance(a, P.Lit)]
             if len(lits) != 2:
                 raise JsoniqCompileError("xml:diff needs (db, res, r1, r2)")
             r1 = self._static_int(node.args[2], scope)
             r2 = self._static_int(node.args[3], scope)
-            script = xml_diff(XmlStore(self.store.root), lits[0], lits[1], r1, r2)
+            script = xml_diff(self.store.xml, lits[0], lits[1], r1, r2)
             df = stream
             if script is None:
                 df = df.limit(0)
@@ -2461,8 +2441,6 @@ class DocEvaluator:
             # the latest revision committed at-or-before the instant;
             # EMPTY before the first revision (the resource did not
             # exist yet — the reference's anachronism regression)
-            from datetime import datetime as _dt
-
             args = []
             for a in node.args:
                 if isinstance(a, P.Lit):
@@ -2479,12 +2457,7 @@ class DocEvaluator:
                     "jn:open needs (db, res, xs:dateTime literal)"
                 )
             db, res, ts_str = args
-            ts = _dt.fromisoformat(str(ts_str).replace("Z", "+00:00"))
-            chosen = None
-            for e in self.store._read_manifest(db, res)["revisions"]:
-                committed = _dt.fromisoformat(e["committed_at"])
-                if committed <= ts:
-                    chosen = e["revision"]
+            chosen = self.store.open_at(db, res, str(ts_str))
             if chosen is None:
                 df = (
                     stream.withColumn("__k", F.lit(None).cast("bigint"))
@@ -2533,9 +2506,9 @@ class DocEvaluator:
             h0 = self.handles.get(base.handles[0])
             e = self.store.rev_entry(h0.db, h0.res, h0.revision)
             val = {
-                "sdb:author-name": e.get("author", "admin"),
-                "sdb:author-id": e.get("author_id", ""),
-                "sdb:timestamp": e.get("committed_at", ""),
+                "sdb:author-name": e.author or "admin",
+                "sdb:author-id": e.author_id or "",
+                "sdb:timestamp": e.committed_at,
             }[name]
             df = (
                 base.df.drop(*ITEM_COLS)
@@ -2877,7 +2850,6 @@ class DocEvaluator:
         )
         from sirix_spark.jsoniq.xpath import serialize_result
         from sirix_spark.sources.xml_source import shred_xml
-        from sirix_spark.store.xmlstore import XmlStore
 
         name = node.name
         base = node.args[0]
@@ -2887,7 +2859,7 @@ class DocEvaluator:
         if len(lits) != 2:
             raise JsoniqCompileError(f"{name} needs literal (db, res)")
         db, res = lits
-        xs = XmlStore(self.store.root)
+        xs = self.store.xml
 
         if name.startswith("xml:find-"):
             kind = name[len("xml:find-"):-len("-index")]
@@ -2919,7 +2891,7 @@ class DocEvaluator:
             bdf.select(F.col("__xid").alias("doc"), F.col("__j").alias("xml"))
         )
         if name == "xml:scan-name-index":
-            names = tuple(idx["paths"])
+            names = idx.paths
             cond = F.col("kind") == "ELEMENT"
             if names:
                 cond = cond & F.col("name").isin(*names)
@@ -2931,7 +2903,7 @@ class DocEvaluator:
             pf = _paths_arg(
                 self, node.args[2] if len(node.args) > 2 else None, scope
             )
-            patterns = pf or tuple(idx["paths"])
+            patterns = pf or idx.paths
             cond = None
             for p in patterns:
                 c = F.col("path").rlike(path_pattern_regex(p))
@@ -2950,7 +2922,7 @@ class DocEvaluator:
                 node.args[pf_pos] if len(node.args) > pf_pos else None,
                 scope,
             )
-            patterns = pf or tuple(idx["paths"])
+            patterns = pf or idx.paths
             pc = None
             for p in patterns:
                 c = F.col("path").rlike(path_pattern_regex(p))
@@ -2960,7 +2932,7 @@ class DocEvaluator:
             cond = F.col("kind").isin("TEXT", "ATTRIBUTE") & (
                 pc if pc is not None else F.lit(True)
             )
-            numeric = idx["content_type"] in (
+            numeric = idx.content_type in (
                 "xs:integer", "xs:decimal", "xs:double", "xs:float",
             )
             if is_range:
@@ -3018,11 +2990,7 @@ class DocEvaluator:
         xml:open-revisions(db,res,$t1,$t2) over the XmlStore sidecar.
         Items carry the revision's serialized XML as their text and
         the revision number as identity (so sdb:revision composes)."""
-        from datetime import datetime as _dt
-
-        from sirix_spark.store.xmlstore import XmlStore
-
-        xs = XmlStore(self.store.root)
+        xs = self.store.xml
 
         def _dt_arg(a):
             if (
@@ -3031,13 +2999,7 @@ class DocEvaluator:
                 and a.args
                 and isinstance(a.args[0], P.Lit)
             ):
-                s = str(a.args[0].value).replace("Z", "+00:00")
-                d = _dt.fromisoformat(s)
-                if d.tzinfo is None:
-                    from datetime import timezone as _tz
-
-                    d = d.replace(tzinfo=_tz.utc)
-                return d
+                return str(a.args[0].value)
             raise JsoniqCompileError(f"{node.name} needs xs:dateTime literals")
 
         lits = [a.value for a in node.args[:2] if isinstance(a, P.Lit)]
@@ -3112,7 +3074,6 @@ class DocEvaluator:
         time like jn:open. The filter is a Spark plan over the node
         table — the parquet/columnar layout serves as the reference's
         valid-time CAS index."""
-        from datetime import datetime as _dt
 
         def _dt_arg(a):
             if (
@@ -3131,13 +3092,8 @@ class DocEvaluator:
             raise JsoniqCompileError(f"{node.name} needs (db, res, …)")
         db, res = lits
         if node.name == "jn:open-bitemporal":
-            tx_str = _dt_arg(node.args[2])
+            chosen = self.store.open_at(db, res, _dt_arg(node.args[2]))
             valid_str = _dt_arg(node.args[3])
-            tx = _dt.fromisoformat(tx_str.replace("Z", "+00:00"))
-            chosen = None
-            for e in self.store._read_manifest(db, res)["revisions"]:
-                if _dt.fromisoformat(e["committed_at"]) <= tx:
-                    chosen = e["revision"]
         else:
             valid_str = _dt_arg(node.args[2])
             chosen = self.store.latest_revision(db, res)
@@ -4035,34 +3991,19 @@ class DocEvaluator:
             # Literal node is shared across all call sites.
             lits = [a.value for a in base.args if isinstance(a, P.Lit)]
             if len(lits) == len(base.args) and len(lits) in (2, 3):
-                from sirix_spark.store.xmlstore import XmlStore
-
-                xs = XmlStore(self.store.root)
-                rev = (
-                    int(lits[2])
-                    if len(lits) == 3
-                    else xs.latest_revision(lits[0], lits[1])
+                xs = self.store.xml
+                e = xs.rev_entry(
+                    lits[0], lits[1], int(lits[2]) if len(lits) == 3 else None
                 )
-                # cache key includes the revision file's identity
+                # cache key includes the revision's commit instant
                 # (round-6 ADVICE #3): XmlStore.store() overwrites
                 # revision 1 in place, so (db,res,rev) alone serves
                 # STALE text to a reused evaluator that re-stores the
                 # same resource between queries.
-                import os as _os
-
-                fp = _os.path.join(
-                    xs._res_dir(lits[0], lits[1]), f"r{rev}.xml"
-                )
-                try:
-                    st = _os.stat(fp)
-                except OSError:
-                    # let read_text raise the store's own error type
-                    xs.read_text(lits[0], lits[1], rev)
-                    raise
-                key = (lits[0], lits[1], rev, st.st_mtime_ns, st.st_size)
+                key = (lits[0], lits[1], e.revision, e.committed_at)
                 colref = self._xtext_lits.get(key)
                 if colref is None:
-                    colref = F.lit(xs.read_text(lits[0], lits[1], rev))
+                    colref = F.lit(xs.read_text(lits[0], lits[1], e.revision))
                     self._xtext_lits[key] = colref
                 return colref, ""
         if not isinstance(base, P.Var):
@@ -5455,8 +5396,8 @@ class DocEvaluator:
             mapping = {}
             for hid in self._var_handles(inner, scope):
                 h = self.handles.get(hid)
-                for e in self.store._read_manifest(h.db, h.res)["revisions"]:
-                    mapping[e["revision"]] = _iso_epoch(e["committed_at"])
+                for e in self.store.entries(h.db, h.res):
+                    mapping[e.revision] = _iso_epoch(e.committed_at)
             expr = F.lit(None).cast("double")
             for rev, secs in mapping.items():
                 expr = F.when(rcol == F.lit(rev), F.lit(secs)).otherwise(expr)

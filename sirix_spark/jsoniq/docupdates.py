@@ -404,7 +404,6 @@ class _PyInterp:
             # existing one; keys assigned through the write trx so
             # node identity is stable from revision 1. xml:load reads
             # the document from a local file path/URI (io/Load.java).
-            from sirix_spark.store.xmlstore import XmlStore
             from sirix_spark.store.xmlwtx import tree_from_rows, tree_keys
 
             db = self._one(self.eval(node.args[0], env))
@@ -418,14 +417,12 @@ class _PyInterp:
                         path = path[1:]
                 with open(path) as f:
                     src = f.read()
-            import shutil
-
             from sirix_spark.sources.xml_source import _shred_one
 
-            xs = XmlStore(self.ev.store.root)
+            xs = self.ev.store.xml
             if xs.exists(db, res):
                 # jn:store createNew semantics: drop and recreate
-                shutil.rmtree(xs._res_dir(db, res))
+                xs.drop_resource(db, res)
             t = tree_from_rows(_shred_one("f", str(src)), None)
             from sirix_spark.store.xmlwtx import serialize_tree
 
@@ -436,7 +433,6 @@ class _PyInterp:
             # document as the next revision; FMSE-lite matching keeps
             # unchanged nodes' keys (store/xmldiff.fmse_import)
             from sirix_spark.store.xmldiff import fmse_import
-            from sirix_spark.store.xmlstore import XmlStore
 
             db = self._one(self.eval(node.args[0], env))
             res = self._one(self.eval(node.args[1], env))
@@ -449,7 +445,7 @@ class _PyInterp:
                         path = path[1:]
                 with open(path) as f:
                     src = f.read()
-            fmse_import(XmlStore(self.ev.store.root), db, res, src)
+            fmse_import(self.ev.store.xml, db, res, src)
             return []
         if name == "jn:drop-database":
             self.ev.store.drop_database(self._one(self.eval(node.args[0], env)))
@@ -549,8 +545,6 @@ class _PyInterp:
         if name.startswith("xml:create-") and name.endswith("-index"):
             # function/xml/index/create/*: register the definition in
             # the XmlStore catalogue (the node table serves the scans)
-            from sirix_spark.store.xmlstore import XmlStore
-
             kind = name[len("xml:create-"):-len("-index")]
             tgt = self._one(self.eval(node.args[0], env))
             if not (isinstance(tgt, tuple) and tgt[0] == "__xmldoc__"):
@@ -566,7 +560,7 @@ class _PyInterp:
                 paths = tuple(
                     str(v.value) for v in self.eval(rest[0], env)
                 )
-            XmlStore(self.ev.store.root).create_index(
+            self.ev.store.xml.create_index(
                 db, res, kind, content_type, paths
             )
             return [PyItem({})]

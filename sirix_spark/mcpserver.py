@@ -334,47 +334,58 @@ class AuditLog:
 def _guarded_store(store, access: AccessControl):
     """GuardedJsonDBStore.java analog: the query tool hands the whole
     DocumentStore to the JSONiq evaluator, so access control must hold
-    INSIDE query evaluation too (jn:doc over a denied database). One
-    choke point guards every read (_read_manifest — every lookup goes
-    through the manifest) and the write entry points enforce
-    read-only."""
+    INSIDE query evaluation too (jn:doc or xml:doc over a denied
+    database). One choke point guards every read (_open — every
+    manifest, revision text and key sidecar of a JSON or XML resource
+    is read through it) and the write entry points of both the JSON
+    and the XML store enforce read-only."""
     from sirix_spark.store.docstore import DocumentStore
+    from sirix_spark.store.xmlstore import XmlStore
 
-    class GuardedDocumentStore(DocumentStore):
-        def _read_manifest(self, db, res):
+    class Guard:
+        def _open(self, db, res, path):
             access.check_access(db, res)
-            return DocumentStore._read_manifest(self, db, res)
+            return super()._open(db, res, path)
 
         def store(self, db, res, *a, **kw):
             access.check_write_access()
             access.check_access(db, res)
-            return DocumentStore.store(self, db, res, *a, **kw)
+            return super().store(db, res, *a, **kw)
 
         def load(self, db, res, *a, **kw):
             access.check_write_access()
             access.check_access(db, res)
-            return DocumentStore.load(self, db, res, *a, **kw)
+            return super().load(db, res, *a, **kw)
 
         def commit(self, db, res, *a, **kw):
             access.check_write_access()
-            return DocumentStore.commit(self, db, res, *a, **kw)
+            return super().commit(db, res, *a, **kw)
 
         def drop_database(self, db):
             access.check_write_access()
             access.check_database_access(db)
-            return DocumentStore.drop_database(self, db)
+            return super().drop_database(db)
 
         def drop_resource(self, db, res):
             access.check_write_access()
-            return DocumentStore.drop_resource(self, db, res)
+            access.check_access(db, res)
+            return super().drop_resource(db, res)
 
         def create_index(self, db, res, *a, **kw):
             access.check_write_access()
-            return DocumentStore.create_index(self, db, res, *a, **kw)
+            return super().create_index(db, res, *a, **kw)
 
         def drop_index(self, db, res, *a, **kw):
             access.check_write_access()
-            return DocumentStore.drop_index(self, db, res, *a, **kw)
+            return super().drop_index(db, res, *a, **kw)
+
+    class GuardedXmlStore(Guard, XmlStore):
+        pass
+
+    class GuardedDocumentStore(Guard, DocumentStore):
+        @property
+        def xml(self):
+            return GuardedXmlStore(self.root)
 
     g = GuardedDocumentStore.__new__(GuardedDocumentStore)
     g.__dict__.update(store.__dict__)
@@ -447,16 +458,13 @@ class ToolHandlers:
             self.access.check_access(database, resource)
             _validate_db_name(database)
             _validate_res_name(resource)
-            revisions = self.store.revisions(database, resource)
-            latest = revisions[-1]
-            first = self.store.rev_entry(database, resource, revisions[0])
-            last = self.store.rev_entry(database, resource, latest)
+            entries = self.store.entries(database, resource)
             info = {
                 "database": database,
                 "resource": resource,
-                "latestRevision": latest,
-                "created": first["committed_at"],
-                "lastModified": last["committed_at"],
+                "latestRevision": entries[-1].revision,
+                "created": entries[0].committed_at,
+                "lastModified": entries[-1].committed_at,
             }
             return ToolResult(json.dumps(info))
 
@@ -494,19 +502,15 @@ class ToolHandlers:
             self.access.check_access(database, resource)
             _validate_res_name(resource)
             limit = _opt_int(args, "count") or self.DEFAULT_HISTORY_COUNT
-            revisions = self.store.revisions(database, resource)
-            entries = []
-            for rev in reversed(revisions[-limit:]):  # newest first
-                e = self.store.rev_entry(database, resource, rev)
-                entry = {
-                    "revision": e["revision"],
-                    "timestamp": e["committed_at"],
-                }
-                if e.get("message") is not None:
-                    entry["message"] = e["message"]
-                entry["user"] = e["author"]
-                entries.append(entry)
-            return ToolResult(json.dumps(entries))
+            out = []
+            # newest first
+            for e in reversed(self.store.entries(database, resource)[-limit:]):
+                entry = {"revision": e.revision, "timestamp": e.committed_at}
+                if e.message is not None:
+                    entry["message"] = e.message
+                entry["user"] = e.author
+                out.append(entry)
+            return ToolResult(json.dumps(out))
 
         return self._with_audit("sirix_history", args, run)
 

@@ -27,13 +27,15 @@ _STOP_SQL = ", ".join(f"'{w}'" for w in STOPWORDS)
 # split(text, ' ') membership: a token is a maximal run between
 # single-space delimiters (^/$ at the ends), the leading delimiter is
 # consumed so adjacent stopwords each match ("a a a" counts 3),
-# duplicates count, and the (?= |$) lookahead rejects prefixes ("ab"
-# never matches "a"). NULL text → NULL on both forms. Bit-identity is
-# pinned by tests/test_nstop_twin.py (adversarial strings + every
-# corpus row at sf0.001/0.01/0.1) and the unchanged DuckDB oracle
-# hashes. Interleaved A/B: −4..−10% on all four consumers
-# (quality_score / lang_id / text_profile / training_corpus_filter).
-_STOP_RE = "(?:^| )(?:" + "|".join(STOPWORDS) + ")(?= |$)"
+# duplicates count, and the (?= |\z) lookahead rejects prefixes ("ab"
+# never matches "a"). \z, not $: Java's $ also matches before a final
+# line terminator, so "the\n" would count a token split() never sees.
+# NULL text → NULL on both forms. Bit-identity is pinned by
+# tests/test_nstop_twin.py (adversarial strings + every corpus row
+# at sf0.001/0.01/0.1) and the unchanged DuckDB oracle hashes.
+# Interleaved A/B: −4..−10% on all four consumers (quality_score /
+# lang_id / text_profile / training_corpus_filter).
+_STOP_RE = "(?:^| )(?:" + "|".join(STOPWORDS) + ")(?= |\\z)"
 
 
 def _n_stop(textcol):

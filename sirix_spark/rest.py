@@ -77,8 +77,9 @@ def _parse_ts(s: str) -> datetime:
         s = s[:-6] + "+" + s[-5:]
     dt = datetime.fromisoformat(s)
     if dt.tzinfo is not None:
-        # Convert to UTC wall time (manifest timestamps are naive UTC);
-        # merely dropping tzinfo would shift lookups by the offset.
+        # Convert to UTC wall time (the store treats a naive instant as
+        # UTC; manifest timestamps are aware ISO-8601 UTC); merely
+        # dropping tzinfo would shift lookups by the offset.
         dt = dt.astimezone(timezone.utc).replace(tzinfo=None)
     return dt
 
@@ -158,18 +159,18 @@ class _Handler(BaseHTTPRequestHandler):
                 return self._send(200, {"databases": dbs})
             if len(parts) == 1:
                 (db,) = parts
-                if not store.exists_database(db):
+                if not store.database_exists(db):
                     return self._send(404, {"error": f"database {db} not found"})
                 import os
 
                 ress = sorted(
                     r for r in os.listdir(os.path.join(store.root, db))
-                    if store.exists_resource(db, r)
+                    if store.exists(db, r)
                 )
                 return self._send(200, {"resources": ress})
 
             db, res = parts[0], parts[1]
-            if not store.exists_resource(db, res):
+            if not store.exists(db, res):
                 return self._send(404, {"error": f"{db}/{res} not found"})
             sub = parts[2] if len(parts) > 2 else None
             limit = int(q["limit"]) if "limit" in q else None
@@ -253,7 +254,7 @@ class _Handler(BaseHTTPRequestHandler):
             db, res = parts
             if not self._authorized(db, write=True):
                 return self._send(401, {"error": "unauthorized"})
-            if self.sirix.store.exists_resource(db, res):
+            if self.sirix.store.exists(db, res):
                 return self._send(409, {"error": f"{db}/{res} exists (PUT to update)"})
             key = q.get("key", "id")
             df = self._records_df()
@@ -275,7 +276,7 @@ class _Handler(BaseHTTPRequestHandler):
             if not self._authorized(db, write=True):
                 return self._send(401, {"error": "unauthorized"})
             store = self.sirix.store
-            if not store.exists_resource(db, res):
+            if not store.exists(db, res):
                 return self._send(404, {"error": f"{db}/{res} not found (POST to create)"})
             key = q.get("key", "id")
             df = self._records_df()
@@ -293,12 +294,12 @@ class _Handler(BaseHTTPRequestHandler):
                 return self._send(401, {"error": "unauthorized"})
             store = self.sirix.store
             if len(parts) == 2:
-                if not store.exists_resource(*parts):
+                if not store.exists(*parts):
                     return self._send(404, {"error": "not found"})
                 store.drop_resource(*parts)
                 return self._send(204, "")
             if len(parts) == 1:
-                if not store.exists_database(parts[0]):
+                if not store.database_exists(parts[0]):
                     return self._send(404, {"error": "not found"})
                 store.drop_database(parts[0])
                 return self._send(204, "")

@@ -11,9 +11,12 @@ Design (SURVEY.md §1.5, §7):
   read cost is bounded by the checkpoint interval, so time-travel
   opens stay flat in revision count (the reference's headline
   property, docs/BENCHMARKS.md:141-153).
-- A JSON manifest per resource records revision, committed_at,
-  author, message — the analog of RevisionRootPage metadata and the
-  /history endpoint (crud/HistoryHandler.kt).
+- One revision log (store/manifest.py) serves the record, JSON
+  document and XML stores: a manifest per resource records revision,
+  committed_at, author, message — the analog of RevisionRootPage
+  metadata and the /history endpoint (crud/HistoryHandler.kt) — and
+  is the only commit point (atomic tmp+rename) and the only place a
+  revision number or instant is resolved.
 """
 
 from sirix_spark.store.store import VersionedStore

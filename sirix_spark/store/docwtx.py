@@ -290,18 +290,10 @@ class DocWtx:
         text = dumps_doc(tree_value(self.root))
         keys = tree_keys(self.root)
         if not self.store.exists(self.db, self.res):
-            rev = self.store.store(
+            return self.store.store(
                 self.db, self.res, text, self.author, self.author_id,
-                message=message,
+                message=message, keys=keys,
             )
-            # store() numbered sequentially; overwrite with our keys
-            # if they differ (they don't for a fresh resource — fresh
-            # counters agree — but stay explicit)
-            self.store._write_revision(self.db, self.res, 1, text, keys=keys)
-            m = self.store._read_manifest(self.db, self.res)
-            m["next_key"] = max(m.get("next_key", 1), max(keys, default=0) + 1)
-            self.store._write_manifest(self.db, self.res, m)
-            return rev
         return self.store.commit(
             self.db, self.res, text, keys=keys,
             author=self.author, author_id=self.author_id,

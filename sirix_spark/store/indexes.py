@@ -31,6 +31,8 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sirix_spark.store.manifest import save_json
+
 
 class IndexCatalog:
     """Per-resource index metadata (analog of the reference's
@@ -44,10 +46,7 @@ class IndexCatalog:
                 self.indexes = json.load(f)["indexes"]
 
     def save(self) -> None:
-        tmp = self.path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"indexes": self.indexes}, f, indent=1)
-        os.replace(tmp, self.path)
+        save_json(self.path, {"indexes": self.indexes})
 
     def add(self, entry: dict) -> None:
         self.indexes.append(entry)
@@ -81,7 +80,7 @@ class ProjectionIndexes:
         self.store = store
 
     def _catalog(self, db: str, res: str) -> IndexCatalog:
-        return IndexCatalog(self.store._res_path(db, res))
+        return IndexCatalog(self.store._res_dir(db, res))
 
     def create_projection_index(
         self,
@@ -105,7 +104,7 @@ class ProjectionIndexes:
             # global sort → range-partitioned files, each covering a
             # narrow key range: max row-group skipping on range scans
             proj = proj.orderBy(*sort_by)
-        path = os.path.join(self.store._res_path(db, res), f"idx_{name}_r{revision:06d}")
+        path = os.path.join(self.store._res_dir(db, res), f"idx_{name}_r{revision:06d}")
         proj.write.mode("errorifexists").parquet(path)
         entry = {
             "name": name,
@@ -189,7 +188,7 @@ class ProjectionIndexes:
         dim = len(first[0])
         base = df.select(RECORD_KEY, column)
         path = os.path.join(
-            self.store._res_path(db, res), f"vidx_{name}_r{revision:06d}"
+            self.store._res_dir(db, res), f"vidx_{name}_r{revision:06d}"
         )
         route = method
         if method == "ivf":

@@ -37,87 +37,30 @@ Physical design (scale-first):
 from __future__ import annotations
 
 import os
-import re
-from datetime import datetime, timezone
+from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from sirix_spark.store.manifest import Manifest, RevisionEntry
+from sirix_spark.store.manifest import RevisionLog, new_entry, utc
 
 RECORD_KEY = "record_key"
 REVISION_COL = "_revision"
 DELETED_COL = "_deleted"
 
 
-class VersionedStore:
+class VersionedStore(RevisionLog):
+    """Revisions are kept by the revision log (store/manifest.py);
+    revision r's files are the directory r{r:06d}/."""
+
     def __init__(self, spark: SparkSession, root: str, checkpoint_every: int = 10):
         self.spark = spark
-        self.root = root
         self.checkpoint_every = checkpoint_every
-        os.makedirs(root, exist_ok=True)
-
-    # ----- database / resource lifecycle (jn:create/drop/exists) -----
-    def _res_path(self, db: str, res: str) -> str:
-        return os.path.join(self.root, db, res)
-
-    def exists_database(self, db: str) -> bool:
-        return os.path.isdir(os.path.join(self.root, db))
-
-    def exists_resource(self, db: str, res: str) -> bool:
-        return os.path.isfile(os.path.join(self._res_path(db, res), "manifest.json"))
-
-    def drop_database(self, db: str) -> None:
-        import shutil
-
-        shutil.rmtree(os.path.join(self.root, db), ignore_errors=True)
-
-    def drop_resource(self, db: str, res: str) -> None:
-        import shutil
-
-        shutil.rmtree(self._res_path(db, res), ignore_errors=True)
-
-    def _manifest(self, db: str, res: str) -> Manifest:
-        return Manifest(os.path.join(self._res_path(db, res), "manifest.json"))
-
-    def recover(self, db: str, res: str) -> list[str]:
-        """Crash recovery (reference: PowerLossSimulationTest /
-        CrashRecoveryInjectionTest semantics): the manifest's atomic
-        tmp+rename is the commit point, so after a kill the manifest
-        always names a fully-committed prefix of revisions. Anything
-        ON DISK beyond it — revision dirs written before the manifest
-        landed, a stranded manifest.json.tmp — is an orphan of the
-        interrupted commit. GC them (a retried commit would otherwise
-        trip its errorifexists parquet write) and return the removed
-        paths."""
-        import shutil
-
-        removed: list[str] = []
-        res_path = self._res_path(db, res)
-        if not self.exists_resource(db, res):
-            return removed
-        head = self._manifest(db, res).latest_revision()
-        for name in sorted(os.listdir(res_path)):
-            full = os.path.join(res_path, name)
-            m = re.fullmatch(r"r(\d{6})", name)
-            if m and os.path.isdir(full) and int(m.group(1)) > head:
-                shutil.rmtree(full, ignore_errors=True)
-                removed.append(full)
-            elif name == "manifest.json.tmp":
-                os.remove(full)
-                removed.append(full)
-        return removed
+        super().__init__(root)
 
     # ----- commit machinery ------------------------------------------
     def _rev_dir(self, db: str, res: str, revision: int) -> str:
-        return os.path.join(self._res_path(db, res), f"r{revision:06d}")
-
-    @staticmethod
-    def _now_iso(timestamp: datetime | None) -> str:
-        dt = timestamp or datetime.now(timezone.utc)
-        if dt.tzinfo is None:
-            dt = dt.replace(tzinfo=timezone.utc)
-        return dt.isoformat()
+        return os.path.join(self._res_dir(db, res), f"r{revision:06d}")
 
     def store(
         self,
@@ -131,30 +74,26 @@ class VersionedStore:
     ) -> int:
         """Create the resource with revision 1 (jn:store semantics —
         Store.java; commitMessage/commitTimestamp overloads)."""
-        if self.exists_resource(db, res):
+        if self.exists(db, res):
             raise ValueError(f"resource {db}/{res} already exists")
-        os.makedirs(self._res_path(db, res), exist_ok=True)
-        if os.listdir(self._res_path(db, res)):
+        os.makedirs(self._res_dir(db, res), exist_ok=True)
+        if os.listdir(self._res_dir(db, res)):
             # leftovers of a store() killed before its manifest landed
             # (no manifest == resource never existed): clear them so
             # the errorifexists parquet write can't trip on orphans
             import shutil
 
-            shutil.rmtree(self._res_path(db, res), ignore_errors=True)
-            os.makedirs(self._res_path(db, res), exist_ok=True)
+            shutil.rmtree(self._res_dir(db, res), ignore_errors=True)
+            os.makedirs(self._res_dir(db, res), exist_ok=True)
         keyed = df.withColumnRenamed(key, RECORD_KEY)
         path = self._rev_dir(db, res, 1)
         keyed.write.mode("errorifexists").parquet(os.path.join(path, "data"))
         n = keyed.count()
         manifest = self._manifest(db, res)
         manifest.append(
-            RevisionEntry(
-                revision=1,
-                committed_at=self._now_iso(commit_timestamp),
-                author=author,
-                message=message,
-                kind="checkpoint",
-                n_upserts=n,
+            new_entry(
+                1, commit_timestamp, author=author, message=message,
+                kind="checkpoint", n_upserts=n, n_deletes=0,
             )
         )
         return 1
@@ -185,7 +124,9 @@ class VersionedStore:
         force_checkpoint: bool = False,
         full_state: bool = False,
     ) -> int:
-        self.recover(db, res)  # GC orphans of any interrupted commit
+        # GC orphans of any interrupted commit (a retried commit would
+        # otherwise trip its errorifexists parquet write)
+        self.recover(db, res)
         manifest = self._manifest(db, res)
         rev = manifest.latest_revision() + 1
         if rev == 1:
@@ -256,14 +197,9 @@ class VersionedStore:
                 n_del = self.spark.read.parquet(del_path).count()
             kind = "delta"
         manifest.append(
-            RevisionEntry(
-                revision=rev,
-                committed_at=self._now_iso(commit_timestamp),
-                author=author,
-                message=message,
-                kind=kind,
-                n_upserts=n_up,
-                n_deletes=n_del,
+            new_entry(
+                rev, commit_timestamp, author=author, message=message,
+                kind=kind, n_upserts=n_up, n_deletes=n_del,
             )
         )
         return rev
@@ -330,10 +266,11 @@ class VersionedStore:
         db: str,
         res: str,
         revision: int | None = None,
-        timestamp: datetime | None = None,
+        timestamp: datetime | str | None = None,
     ) -> DataFrame:
         """Open the resource at a revision / point in time
-        (jn:doc Doc.java, jn:open DocByPointInTime.java).
+        (jn:doc Doc.java, jn:open DocByPointInTime.java; a naive
+        timestamp is UTC).
 
         Merge-on-read: base checkpoint + deltas, latest wins per key.
         Cost is bounded by checkpoint_every, independent of total
@@ -343,6 +280,8 @@ class VersionedStore:
             if revision is not None:
                 raise ValueError("pass either revision or timestamp, not both")
             revision = manifest.revision_at(timestamp)
+            if revision is None:
+                raise KeyError(f"no revision committed at or before {timestamp}")
         revision = revision or manifest.latest_revision()
         if revision < 1:
             raise KeyError(f"resource {db}/{res} has no revisions")
@@ -383,23 +322,10 @@ class VersionedStore:
             .drop("_rn", REVISION_COL, DELETED_COL)
         )
 
-    def open_revisions(self, db: str, res: str, ts1: datetime, ts2: datetime) -> list[int]:
-        """jn:open-revisions — all revisions committed in [ts1, ts2]
-        (OpenRevisions.java)."""
-        if ts1.tzinfo is None:
-            ts1 = ts1.replace(tzinfo=timezone.utc)
-        if ts2.tzinfo is None:
-            ts2 = ts2.replace(tzinfo=timezone.utc)
-        return [
-            e.revision
-            for e in self._manifest(db, res).entries
-            if ts1 <= e.committed_at_dt <= ts2
-        ]
-
     def history(self, db: str, res: str) -> DataFrame:
         """/history — revision, timestamp, author, message
         (HistoryHandler.kt; sdb:revision/timestamp accessors)."""
-        entries = self._manifest(db, res).entries
+        entries = self.entries(db, res)
         return self.spark.createDataFrame(
             [
                 (e.revision, e.committed_at, e.author, e.message, e.kind, e.n_upserts, e.n_deletes)
@@ -409,13 +335,9 @@ class VersionedStore:
             "kind string, n_upserts long, n_deletes long",
         )
 
-    def latest_revision(self, db: str, res: str) -> int:
-        """sdb:most-recent-revision (GetMostRecentRevision.java)."""
-        return self._manifest(db, res).latest_revision()
-
     def revision_timestamp(self, db: str, res: str, revision: int) -> datetime:
         """sdb:revision-timestamp (GetRevisionTimestamp.java)."""
-        return self._manifest(db, res).entry(revision).committed_at_dt
+        return utc(self.rev_entry(db, res, revision).committed_at)
 
     def change_view(self, db: str, res: str, max_revision: int | None = None) -> DataFrame:
         """One row per (record, revision-where-it-changed): the

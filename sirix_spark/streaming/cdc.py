@@ -19,12 +19,12 @@ def change_feed(store: VersionedStore, db: str, res: str, r1: int, r2: int) -> D
     """CDC rows for every adjacent revision pair in (r1, r2]:
     (revision, committed_at, op, record_key, old, new)."""
     parts = []
+    entries = store.entries(db, res)
     for r in range(r1 + 1, r2 + 1):
-        meta = store._manifest(db, res).entry(r)
         d = store.diff(db, res, r - 1, r)
         parts.append(
             d.withColumn("revision", F.lit(r)).withColumn(
-                "committed_at", F.lit(meta.committed_at)
+                "committed_at", F.lit(entries[r - 1].committed_at)
             )
         )
     if not parts:
@@ -56,7 +56,7 @@ def stream_ingest(
     def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        if not store.exists_resource(db, res):
+        if not store.exists(db, res):
             store.store(db, res, batch_df, key=key, message=f"stream batch {batch_id}")
         else:
             store.upsert_records(db, res, batch_df, key=key, message=f"stream batch {batch_id}")

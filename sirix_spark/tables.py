@@ -112,9 +112,9 @@ def _cache_parts(spark: SparkSession, name: str, rows: int) -> int:
     """Cached-table partition count (see the _CACHE_TARGET_ROWS /
     _COMPUTE_HEAVY notes above)."""
     cores = spark.sparkContext.defaultParallelism
-    cap = cores if name in _FACT_TABLES else 8
     if name in _COMPUTE_HEAVY:
-        return min(cores, max(cap, rows // _HEAVY_ROWS_PER_PART))
+        return max(8, min(cores, rows // _HEAVY_ROWS_PER_PART))
+    cap = cores if name in _FACT_TABLES else 8
     return min(cap, -(-rows // _CACHE_TARGET_ROWS) or 1)
 
 

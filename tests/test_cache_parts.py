@@ -22,9 +22,9 @@ def test_cache_parts_regimes(spark):
     # compute-heavy floor: bench-SF row counts keep the old 8
     assert _cache_parts(spark, "documents", 5_000) == 8
     assert _cache_parts(spark, "embeddings", 2_000) == 8
-    # growth: 30x-scale corpus uses every core
-    assert _cache_parts(spark, "documents", 150_000) == min(
-        cores, 150_000 // _HEAVY_ROWS_PER_PART
+    # growth: 30x-scale corpus uses every core, never below the floor
+    assert _cache_parts(spark, "documents", 150_000) == max(
+        8, min(cores, 150_000 // _HEAVY_ROWS_PER_PART)
     )
     # scan-bound dims: row-scaled under the dim cap
     assert _cache_parts(spark, "customer", _CACHE_TARGET_ROWS) == 1

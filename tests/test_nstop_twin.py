@@ -25,6 +25,8 @@ ADVERSARIAL = [
     "word the word of word",
     "a\tb the",                      # tab is NOT a delimiter: "a\tb"
     "of\nthe",                       # newline not a delimiter either
+    "the\n",                         # final line terminator: $ would match
+    "a\r",                           # ... before it; the twin needs \z
     None,                            # NULL -> NULL both forms
 ]
 

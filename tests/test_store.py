@@ -237,15 +237,15 @@ def test_bitemporal_scenario(store, spark):
 def test_lifecycle(store, spark):
     db = "lifecycle_db"
     df = spark.createDataFrame([(1, "x")], "id long, v string")
-    assert not store.exists_resource(db, "r")
+    assert not store.exists(db, "r")
     store.store(db, "r", df, key="id")
-    assert store.exists_database(db) and store.exists_resource(db, "r")
+    assert store.database_exists(db) and store.exists(db, "r")
     with pytest.raises(ValueError):
         store.store(db, "r", df, key="id")
     store.drop_resource(db, "r")
-    assert not store.exists_resource(db, "r")
+    assert not store.exists(db, "r")
     store.drop_database(db)
-    assert not store.exists_database(db)
+    assert not store.database_exists(db)
 
 
 def test_path_summary_off_combination(spark, tmp_path):

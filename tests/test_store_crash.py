@@ -256,7 +256,7 @@ def test_versioned_store_torn_manifest_tmp(spark):
     root = tempfile.mkdtemp()
     vs = VersionedStore(spark, root)
     vs.store("db", "r", spark.createDataFrame([(1, "x")], "id long, v string"), key="id")
-    tmp = os.path.join(vs._res_path("db", "r"), "manifest.json.tmp")
+    tmp = os.path.join(vs._res_dir("db", "r"), "manifest.json.tmp")
     with open(tmp, "w") as f:
         f.write('{"revisions": [')  # torn write
     fresh = VersionedStore(spark, root)
@@ -281,6 +281,6 @@ def test_store_killed_before_first_manifest(spark):
     df.withColumnRenamed("id", "record_key").write.parquet(
         os.path.join(vs._rev_dir("db", "r", 1), "data")
     )
-    assert not vs.exists_resource("db", "r")
+    assert not vs.exists("db", "r")
     assert vs.store("db", "r", df, key="id") == 1
     assert [r["record_key"] for r in vs.doc("db", "r").collect()] == [1]
